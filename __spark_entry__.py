@@ -12,6 +12,7 @@ builds the Spark expressions (single source of truth, no drift).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -832,7 +833,9 @@ def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk_ivf(emb, probes, "vec_id", "embedding", _ivf_centroids(), k=10, nprobe=4)
 
 
-_MEDIA_FIXTURE = "/root/repo/.fixtures/media.parquet"
+_MEDIA_FIXTURE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), ".fixtures", "media.parquet"
+)
 
 
 def _ensure_media_fixture() -> str:
@@ -840,8 +843,6 @@ def _ensure_media_fixture() -> str:
     Spark session needed, so the oracle side can also trigger it). Same
     shape as operators.multimodal.MEDIA_SCHEMA; payload bytes are seeded.
     """
-    import os
-
     if os.path.exists(_MEDIA_FIXTURE):
         return _MEDIA_FIXTURE
     import numpy as np
@@ -906,6 +907,7 @@ def q_repos_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocking make every stage (signatures, bands, blocks, scores,
     components) reproducible by the DuckDB oracle; the metaphone/xxhash64
     production configuration is F1-gated in pytest."""
+    from registry_address_matcher_spark.config import ScaleConfig
     from registry_address_matcher_spark.repos_pipeline import (
         ReposMatchConfig,
         accepted_pairs,
@@ -936,10 +938,8 @@ def q_repos_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # encoded truncation is the phonetic_block_cap, which cfg carries).
     # The default max_pairs_per_block guard stays on for the production
     # pipeline (bench.py, match_job) — same contract as q_v3_multiblock.
-    from registry_address_matcher_spark.config import ScaleConfig as _SC
-
     cand = candidate_block_pairs(
-        norm, cfg, scale=_SC(max_pairs_per_block=None), side_out=side_out
+        norm, cfg, scale=ScaleConfig(max_pairs_per_block=None), side_out=side_out
     )
     scored = score_pairs(cand, norm, cfg, side=side_out[0])
     pairs = accepted_pairs(scored, cfg).unionByName(

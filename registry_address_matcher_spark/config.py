@@ -74,41 +74,12 @@ class ScaleConfig:
     # seconds and inside executor memory — while billion-edge graphs
     # still take the skew-safe path.
     cc_window_max_edges: int = 8_000_000
-    # -- CPU-bound Arrow-stage partitioning ---------------------------------
-    # Target candidate pairs per scoring partition. ~320k pairs/partition
-    # is the measured sweet spot for the 4-scorer kernel (10.2M-pair job,
-    # 8 cores: 32 partitions 33.1 s vs 48 partitions 35.2 s vs 41
-    # partitions 45.3 s — bigger batches amortize the Arrow crossing and
-    # pair-cache better; the count is also rounded up to whole scheduling
-    # waves, see partitioning.py). The scoring stage derives the count
-    # from a cheap pre-aggregate over the block keys — the SAME partition
-    # size at every cluster size, so throughput scales with cores instead
-    # of batch-efficiency shifting under the measurement.
-    pairs_per_partition: int = 320_000
-    # Estimate the pair count with one small aggregate action at plan-build
-    # time (the aggregates are over block-key counts, not the data).
-    # False -> fall back to 4 x defaultParallelism partitions.
-    adaptive_scoring_partitions: bool = True
-    # Distinct-pair scoring memoization: the pair kernel is a pure
-    # function of the two street strings, and real street vocabularies
-    # are far smaller than row counts — when the product of per-side
-    # distinct street counts (an upper bound on distinct scored pairs)
-    # is at or below this bound, the kernel runs once per DISTINCT
-    # co-blocked street pair and the scores broadcast-join back onto the
-    # pair set (the heavy rows never cross the Python boundary). Above
-    # the bound — or on estimate failure — the kernel runs directly over
-    # the pairs exactly as before. 500k pairs x ~100 B is a ~50 MB
-    # broadcast, safe on any executor. None/0 disables.
-    scoring_dedup_max_pairs: int | None = 500_000
 
     def __post_init__(self) -> None:
         # fail fast with a named knob: a zero/negative value otherwise
         # surfaces deep in a job as an ANSI pmod/divide error or an
         # empty-quota truncation with no pointer back to the config
-        for knob in (
-            "hot_block_threshold", "salt_buckets", "cc_max_iterations",
-            "pairs_per_partition",
-        ):
+        for knob in ("hot_block_threshold", "salt_buckets", "cc_max_iterations"):
             if getattr(self, knob) < 1:
                 raise ValueError(f"ScaleConfig.{knob} must be >= 1")
         if self.max_pairs_per_block is not None and self.max_pairs_per_block < 1:

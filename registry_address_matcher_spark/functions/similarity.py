@@ -261,7 +261,7 @@ def blend4_scores(a: str, b: str, mask_cache: dict | None = None) -> tuple[float
     """One (token_sort, token_set, partial, ratio) tuple for a single
     pair — the exact per-pair math of :func:`fuzzy_scores`, shared so the
     vectorized kernel and the driver-side vocabulary scorer
-    (operators.fuzzy._driver_scored_pairs) cannot drift."""
+    (operators.fuzzy.score_candidates's driver tier) cannot drift."""
     if a == b:
         return (100.0, 100.0, 100.0, 100.0)
     if " " not in a and " " not in b:

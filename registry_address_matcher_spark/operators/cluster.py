@@ -137,10 +137,7 @@ def connected_components(
     Isolated nodes (present only as self-edges or absent) are the caller's
     concern — feed every node as a self-edge if singletons must appear.
     """
-    import os
-
     scale = scale or ScaleConfig()
-    debug = bool(os.environ.get("RAM_SPARK_DEBUG"))
     # lazy checkpoint: the count() below materializes it inside its own
     # job instead of paying a separate eager-checkpoint job first
     cur = _canonical(edges).localCheckpoint(eager=False)
@@ -161,14 +158,12 @@ def connected_components(
     # per-block overhead with no compute to hide it). session_parts
     # (cluster-sized) caps the count at scale exactly as before; the
     # divisor is a per-partition SIZE target, not a core-count constant.
-    cc_parts = int(os.environ.get("RAM_SPARK_CC_PARTS", "0")) or max(
-        2, min(session_parts, n0 // 80_000 + 1)
-    )
+    cc_parts = max(2, min(session_parts, n0 // 80_000 + 1))
     # small graph -> window-based node-min (see _node_min): the n0 bound
     # holds for every iterate too — star rounds never grow the canonical
     # edge count above the node count of the original graph <= 2*n0
     window_ok = n0 <= scale.cc_window_max_edges // 2
-    cur = _cc_loop(cur, scale, debug, cc_parts, window_ok)
+    cur = _cc_loop(cur, scale, cc_parts, window_ok)
     # converged edge set is a star forest in canonical (src < dst) form:
     # src is the component minimum (the root)
     members = cur.select(F.col("dst").alias("node"), F.col("src").alias("component"))
@@ -182,13 +177,10 @@ def connected_components(
 
 
 def _cc_loop(
-    cur: DataFrame, scale: ScaleConfig, debug: bool, n_part: int, window_ok: bool = False
+    cur: DataFrame, scale: ScaleConfig, n_part: int, window_ok: bool = False
 ) -> DataFrame:
-    import time
-
     prev_fp = None
     for it in range(scale.cc_max_iterations):
-        t0 = time.time()
         # small_star output is already canonical (src < dst, deduped)
         nxt = _small_star(_large_star(cur, n_part, window_ok), n_part, window_ok)
         if scale.cc_checkpoint_interval and (it % scale.cc_checkpoint_interval == 0):
@@ -196,8 +188,6 @@ def _cc_loop(
             # materializing action — one job per round instead of two
             nxt = nxt.localCheckpoint(eager=False)
         fp = _fingerprint(nxt)
-        if debug:
-            print(f"[cc] iter {it}: {time.time() - t0:.2f}s edges={fp[0]}", flush=True)
         if fp == prev_fp:
             cur = nxt
             break

@@ -26,7 +26,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import MatchConfig, ScaleConfig
-from ..functions.similarity import best_of_strategies, fuzzy_scores
+from ..functions.similarity import (
+    best_of_strategies,
+    blend4_scores,
+    fuzzy_scores,
+    jaro_winkler_similarity,
+    jaro_winkler_udf,
+)
 from .blocking import salted_join
 from .exact import as_match_records
 
@@ -106,118 +112,73 @@ def estimate_block_pairs(spr: DataFrame, cad: DataFrame, keys: list[str]) -> int
     return int(row["pairs"] or 0)
 
 
-def _scoring_partitions(spr: DataFrame, cad: DataFrame, scale: ScaleConfig | None) -> int:
+#: target candidate pairs per direct-tier scoring partition: the measured
+#: sweet spot for the 4-scorer kernel (10.2M-pair job, 8 cores: 32
+#: partitions 33.1 s vs 48 partitions 35.2 s vs 41 partitions 45.3 s —
+#: bigger batches amortize the Arrow crossing and pair-cache better)
+_PAIRS_PER_PARTITION = 320_000
+
+
+def _scoring_partitions(spr: DataFrame, cad: DataFrame) -> int:
     """Partition count for the CPU-bound Arrow scoring stage.
 
-    Adaptive (default): ceil(pairs / pairs_per_partition) rounded up to a
-    whole number of scheduling waves, from a cheap block-key-count
-    estimate (~1-2 s at 600k probe rows, exact — it is the same
-    sum-of-products the join performs). Keeping the PARTITION SIZE
-    constant (~250k pairs) across cluster sizes is what makes throughput
-    scale with cores — a cores-derived count changes the Arrow batch size
-    under the measurement (round-2 regression: 4 x cores gave 128
-    undersized partitions at 32 cores and 3.14 s -> 4.61 s on the
-    identical sf0.1 input); wave rounding avoids a ragged last wave
-    (see partitioning.cpu_stage_partitions). Fallback when adaptation is
-    disabled or the estimate fails: 4 x cores. ``RAM_SPARK_SCORE_PARTS``
-    overrides both.
+    ceil(pairs / _PAIRS_PER_PARTITION) rounded up to a whole number of
+    scheduling waves, from a cheap block-key-count estimate (~1-2 s at
+    600k probe rows, exact — it is the same sum-of-products the join
+    performs). Keeping the PARTITION SIZE constant across cluster sizes
+    is what makes throughput scale with cores — a cores-derived count
+    changes the Arrow batch size under the measurement (round-2
+    regression: 4 x cores gave 128 undersized partitions at 32 cores and
+    3.14 s -> 4.61 s on the identical sf0.1 input); wave rounding avoids
+    a ragged last wave (see partitioning.cpu_stage_partitions). Fallback
+    when the estimate fails: 4 x cores.
     """
-    import os
-
     from ..partitioning import cpu_stage_partitions
 
-    scale = scale or ScaleConfig()
-    override = int(os.environ.get("RAM_SPARK_SCORE_PARTS", "0"))
-    if override:
-        return override
-    sc = spr.sparkSession.sparkContext
-    cores = sc.defaultParallelism
-    if scale.adaptive_scoring_partitions:
-        try:
-            est = estimate_block_pairs(spr, cad, ["HOUSE_NORM", "BUILDING_NORM"])
-            return cpu_stage_partitions(est, scale.pairs_per_partition, cores)
-        except Exception as exc:  # estimate is an optimization, never a failure mode
-            # ...but a silently non-adaptive run must be visible
-            # (VERDICT r3 #5): record to the metrics sidecar + WARN log
-            from ..plans.events import record_event
+    cores = spr.sparkSession.sparkContext.defaultParallelism
+    try:
+        est = estimate_block_pairs(spr, cad, ["HOUSE_NORM", "BUILDING_NORM"])
+        return cpu_stage_partitions(est, _PAIRS_PER_PARTITION, cores)
+    except Exception as exc:  # estimate is an optimization, never a failure mode
+        # ...but a silently non-adaptive run must be visible
+        # (VERDICT r3 #5): record to the metrics sidecar + WARN log
+        from ..plans.events import record_event
 
-            record_event(
-                "scoring", "adaptive_partition_estimate_failed",
-                f"{type(exc).__name__}; fell back to 4 x cores",
-            )
+        record_event(
+            "scoring", "adaptive_partition_estimate_failed",
+            f"{type(exc).__name__}; fell back to 4 x cores",
+        )
     return max(cores * 4, 8)
 
 
-#: vocabulary-product ceiling for DRIVER-side distinct-pair scoring:
-#: below it the whole vocabulary is collected in one bounded action
-#: (<= this many strings per side) and scored in-process — ~0.4 s of
-#: single-thread kernel work worst-case — replacing the distinct-
-#: aggregate + Python-worker broadcast subtree with a LocalTableScan.
-#: Between this and scoring_dedup_max_pairs, the distinct pairs are
-#: built and scored distributedly instead.
+#: vocabulary-product ceiling for the DRIVER scoring tier: at or below it
+#: the cross of the two street vocabularies is scored in-process (~11k
+#: pairs take ~0.5 s on one core) and broadcast back as a LocalTableScan,
+#: so the candidate-pair set never crosses into Python. Above it the
+#: Arrow kernel scores every candidate pair (the direct tier).
 _DRIVER_SCORE_MAX_PAIRS = 50_000
+#: row cap of the guard's vocabulary collect — a few MB worst case
+_VOCAB_ROW_CAP = 20_000
 
 
-def _vocab_union(spr: DataFrame, cad: DataFrame) -> DataFrame:
-    """Side-tagged union of the two filtered street projections (the
-    vocabulary carrier both guard actions aggregate over)."""
-    return (
-        spr.filter((F.col("HOUSE_NORM") != "") & (F.col("STREET_NORM") != ""))
-        .select(F.lit(0).alias("__side"), "STREET_NORM")
-        .unionAll(
-            cad.filter((F.col("HOUSE_NORM") != "") & (F.col("STREET_NORM") != ""))
-            .select(F.lit(1).alias("__side"), "STREET_NORM")
-        )
-    )
+def _driver_vocab(spr: DataFrame, cad: DataFrame) -> tuple[list[str], list[str]] | None:
+    """The scoring tier's one guard action: collect the distinct
+    side-tagged street vocabulary, at most _VOCAB_ROW_CAP + 1 rows.
 
+    Returns the sorted (probe, build) street lists when their product is
+    at most _DRIVER_SCORE_MAX_PAIRS (driver tier), else None (direct
+    tier). An overflowing collect means direct; so does a failed one,
+    recorded as an event."""
+    def streets(df: DataFrame, side: int) -> DataFrame:
+        return df.filter(
+            (F.col("HOUSE_NORM") != "") & (F.col("STREET_NORM") != "")
+        ).select(F.lit(side).alias("__side"), "STREET_NORM")
 
-def _scoring_dedup_mode(spr: DataFrame, cad: DataFrame, scale: ScaleConfig):
-    """Pick the distinct-pair memoization tier from the vocabulary sizes.
-
-    Returns one of:
-      ("driver", va, vb) — vocabulary product <= _DRIVER_SCORE_MAX_PAIRS:
-        both (bounded) street lists are collected and the score table is
-        built in-process (a LocalTableScan broadcast — no distinct
-        aggregates or Python-worker stage in the plan);
-      ("spark", None, None) — product fits scale.scoring_dedup_max_pairs:
-        distinct pairs are built and scored distributedly;
-      ("direct", None, None) — vocabulary too large (or estimate
-        failed): the kernel runs over the pair set as before.
-    One countDistinct action for both sides; the driver tier adds one
-    collect bounded by the product bound (so at most
-    _DRIVER_SCORE_MAX_PAIRS strings per side, typically far fewer)."""
-    bound = scale.scoring_dedup_max_pairs
-    if not bound:
-        return ("direct", None, None)
     try:
-        # ONE bounded action in the common case: pull the distinct
-        # side-tagged vocabulary up to a row cap. Under the cap the lists
-        # themselves are in hand, so every tier decision is exact with no
-        # second job; over the cap (collect returned the cap+ rows but
-        # never more — a few MB worst case) fall back to one
-        # countDistinct action to choose spark-vs-direct.
-        row_cap = 20_000
-        vocab = _vocab_union(spr, cad).distinct().limit(row_cap + 1).collect()
-        if len(vocab) <= row_cap:
-            va = sorted(r["STREET_NORM"] for r in vocab if r["__side"] == 0)
-            vb = sorted(r["STREET_NORM"] for r in vocab if r["__side"] == 1)
-            prod = len(va) * len(vb)
-            if prod > bound:
-                return ("direct", None, None)
-            if prod > _DRIVER_SCORE_MAX_PAIRS:
-                return ("spark", None, None)
-            return ("driver", va, vb)
-        rows = (
-            _vocab_union(spr, cad)
-            .groupBy("__side")
-            .agg(F.countDistinct("STREET_NORM").alias("n"))
-            .collect()
+        vocab = (
+            streets(spr, 0).unionAll(streets(cad, 1))
+            .distinct().limit(_VOCAB_ROW_CAP + 1).collect()
         )
-        counts = {int(r["__side"]): int(r["n"]) for r in rows}
-        prod = counts.get(0, 0) * counts.get(1, 0)
-        if prod > bound:
-            return ("direct", None, None)
-        return ("spark", None, None)
     except Exception as exc:
         from ..plans.events import record_event
 
@@ -225,68 +186,62 @@ def _scoring_dedup_mode(spr: DataFrame, cad: DataFrame, scale: ScaleConfig):
             "scoring", "dedup_estimate_failed",
             f"{type(exc).__name__}; scoring pairs directly",
         )
-        return ("direct", None, None)
+        return None
+    if len(vocab) > _VOCAB_ROW_CAP:
+        return None
+    va = sorted(r["STREET_NORM"] for r in vocab if r["__side"] == 0)
+    vb = sorted(r["STREET_NORM"] for r in vocab if r["__side"] == 1)
+    return (va, vb) if len(va) * len(vb) <= _DRIVER_SCORE_MAX_PAIRS else None
 
 
-def _driver_scored_pairs(spark, va: list[str], vb: list[str], scorer: str) -> DataFrame:
-    """Score the vocabulary cross in-process with the SAME kernel
-    functions the UDFs use (similarity.blend4_scores /
-    jaro_winkler_similarity — identical floats by construction) and
-    return a local score table. Kernel work is bounded by
-    _DRIVER_SCORE_MAX_PAIRS (~0.4 s single-thread worst case); any
-    scaling/rounding stays in Spark expressions so both paths share
-    them."""
-    from ..functions.similarity import blend4_scores, jaro_winkler_similarity
+def _jw_best(raw: str):
+    """jw finish: scaled to 0-100 and rounded to 4 decimals in Spark, so
+    an external engine with a native jaro_winkler reproduces every value."""
+    return F.round(100.0 * F.col(raw), 4), F.lit("jw"), F.lit(0)
 
-    if scorer == "jw":
-        data = [
-            (a, b, jaro_winkler_similarity(a, b)) for a in va for b in vb
-        ]
-        return spark.createDataFrame(
-            data, "__street_spr string, __street_cad string, __jw_raw double"
-        )
+
+def _scorer(name: str):
+    """Everything the two scorers differ in, chosen once:
+    (Arrow UDF of the direct tier, per-pair kernel of the driver tier,
+    SQL type of the raw score both tiers yield, finish mapping the raw
+    column name to (best_score, best_strategy, strategy_rank)).
+    Each UDF wraps its kernel, so both tiers give identical floats."""
+    if name == "jw":
+        return jaro_winkler_udf, jaro_winkler_similarity, "double", _jw_best
     mask_cache: dict = {}
-    data = [(a, b, blend4_scores(a, b, mask_cache)) for a in va for b in vb]
-    return spark.createDataFrame(
-        data,
-        "__street_spr string, __street_cad string, "
-        "scores struct<token_sort_ratio:double,token_set_ratio:double,"
+    return (
+        fuzzy_scores,
+        lambda a, b: blend4_scores(a, b, mask_cache),
+        "struct<token_sort_ratio:double,token_set_ratio:double,"
         "partial_ratio:double,ratio:double>",
-    )
-
-
-def _distinct_street_pairs(spr: DataFrame, cad: DataFrame) -> DataFrame:
-    """Cross of the per-side DISTINCT street vocabularies — a covering
-    superset of the street pairs the scoring stage will see. A plain
-    cross (not a co-block join) keeps the subtree at two map-side
-    distinct aggregates plus one nested-loop join of vocabulary-sized
-    inputs; the guard has already bounded |a| x |b|, so the extra
-    never-co-blocked pairs cost at most the bound's worth of kernel
-    work, spread by the repartition."""
-    pa = (
-        spr.filter((F.col("HOUSE_NORM") != "") & (F.col("STREET_NORM") != ""))
-        .select(F.col("STREET_NORM").alias("__street_spr")).distinct()
-    )
-    pb = (
-        cad.filter((F.col("HOUSE_NORM") != "") & (F.col("STREET_NORM") != ""))
-        .select(F.col("STREET_NORM").alias("__street_cad")).distinct()
-    )
-    return pa.repartition(spr.sparkSession.sparkContext.defaultParallelism).crossJoin(
-        F.broadcast(pb)
+        best_of_strategies,
     )
 
 
 def _attach_pair_scores(to_score: DataFrame, uniq_scored: DataFrame) -> DataFrame:
     """Broadcast the per-distinct-pair score table back onto the pair
     set. Inner equi-join on the two street columns: every scoring row's
-    street pair is present in the co-blocked distinct table by
-    construction, and the table is distinct, so the join neither drops
-    nor duplicates rows."""
+    street pair is present in the vocabulary cross by construction, and
+    the cross is distinct, so the join neither drops nor duplicates
+    rows."""
     return to_score.join(
         F.broadcast(uniq_scored),
         (F.col("STREET_NORM_SPR") == F.col("__street_spr"))
         & (F.col("STREET_NORM_CAD") == F.col("__street_cad")),
     ).drop("__street_spr", "__street_cad")
+
+
+def _scoring_set(pairs: DataFrame) -> DataFrame:
+    """CANDIDATES_COUNT, then the pairs that get scored.
+
+    CANDIDATES_COUNT counts ALL house+building candidates per SPR row,
+    including empty-street ones (advanced_matcher.py:406 uses
+    len(exact_candidates) from :350-355, before the street filter); the
+    scoring set drops empty streets on both sides (:365-372, :377-378)."""
+    w_cnt = Window.partitionBy("ADDRESS_ID_SPR")
+    return pairs.withColumn("CANDIDATES_COUNT", F.count(F.lit(1)).over(w_cnt)).filter(
+        (F.col("STREET_NORM_SPR") != "") & (F.col("STREET_NORM_CAD") != "")
+    )
 
 
 def score_candidates(
@@ -306,6 +261,12 @@ def score_candidates(
     native jaro_winkler (the driver's DuckDB oracle); the blend4 kernels
     stay oracle-checked in pytest (DuckDB JW / DP-LCS property tests).
 
+    Two tiers, picked by one bounded guard action (_driver_vocab): a
+    small street vocabulary is scored once per distinct pair on the
+    driver and joined back (guide §8: decide on the lightweight proxy,
+    attach back to the heavy rows); otherwise the Arrow kernel scores
+    every pair. Both yield the same raw score column.
+
     Output is SLIM — (ids, streets, count, best_*) only; fuzzy_matches /
     fuzzy_topk join the report columns back after top-1. At scale the
     candidate-pair set is orders of magnitude larger than the match set,
@@ -314,14 +275,10 @@ def score_candidates(
     Shared by fuzzy_matches / fuzzy_topk / the bench scaling job so the
     block join is planned exactly once per caller."""
     scale = scale or ScaleConfig()
+    udf, kernel, raw_type, finish = _scorer(scorer)
     pairs = candidate_pairs(spr, cad, scale, columns=_SLIM_COLS)
-
-    # score distinct pairs once when the vocabulary is small (guide §8:
-    # decide on the lightweight proxy, attach back to the heavy rows) —
-    # the pair set then never crosses the JVM<->Python boundary
-    mode, va, vb = _scoring_dedup_mode(spr, cad, scale)
-    use_dedup = mode != "direct"
-    if not use_dedup:
+    vocab = _driver_vocab(spr, cad)
+    if vocab is None:
         # explicit repartition before the Arrow kernel: AQE sizes partitions
         # by COMPRESSED shuffle bytes, and candidate pairs compress extremely
         # well (repeated block strings) — left alone, the CPU-bound Python
@@ -331,68 +288,29 @@ def score_candidates(
         # ADDRESS_ID_SPR at any partition count satisfies the window's
         # clustering requirement, so the window costs one local sort instead
         # of its own full exchange of the candidate-pair set (guide §2.4).
-        # In dedup mode there is no kernel over the pairs to spread, so the
-        # explicit exchange is skipped — a caller that needs the window
-        # gets one implicit session-width exchange, and a pure aggregate
-        # over the scores (the bench's throughput stage) runs with NO
-        # exchange of the pair set at all.
-        n_part = _scoring_partitions(spr, cad, scale)
-        pairs = pairs.repartition(n_part, "ADDRESS_ID_SPR")
-
-    # CANDIDATES_COUNT counts ALL house+building candidates per SPR row,
-    # including empty-street ones (advanced_matcher.py:406 uses
-    # len(exact_candidates) from :350-355, before the street filter).
-    w_cnt = Window.partitionBy("ADDRESS_ID_SPR")
-    pairs = pairs.withColumn("CANDIDATES_COUNT", F.count(F.lit(1)).over(w_cnt))
-
-    # scoring set: drop empty streets on both sides (:365-372, :377-378)
-    to_score = pairs.filter(
-        (F.col("STREET_NORM_SPR") != "") & (F.col("STREET_NORM_CAD") != "")
-    )
-    if scorer == "jw":
-        from ..functions.similarity import jaro_winkler_udf
-
-        def jw_col(a, b):
-            return F.round(100.0 * jaro_winkler_udf(a, b), 4)
-
-        if mode == "driver":
-            uniq = _driver_scored_pairs(spr.sparkSession, va, vb, "jw").withColumn(
-                "best_score", F.round(100.0 * F.col("__jw_raw"), 4)
-            ).drop("__jw_raw")
-            scored = _attach_pair_scores(to_score, uniq)
-        elif mode == "spark":
-            uniq = _distinct_street_pairs(spr, cad).withColumn(
-                "best_score", jw_col(F.col("__street_spr"), F.col("__street_cad"))
-            )
-            scored = _attach_pair_scores(to_score, uniq)
-        else:
-            scored = to_score.withColumn(
-                "best_score", jw_col(F.col("STREET_NORM_SPR"), F.col("STREET_NORM_CAD"))
-            )
-        return (
-            scored.withColumn("best_strategy", F.lit("jw"))
-            .withColumn("strategy_rank", F.lit(0))
+        # (equal-string pairs short-circuit INSIDE the kernel — a JVM-side
+        # filter+union split would recompute the block join once per branch)
+        pairs = pairs.repartition(_scoring_partitions(spr, cad), "ADDRESS_ID_SPR")
+        scored = _scoring_set(pairs).withColumn(
+            "__raw", udf(F.col("STREET_NORM_SPR"), F.col("STREET_NORM_CAD"))
         )
-    # (equal-string pairs short-circuit INSIDE the kernel — a JVM-side
-    # filter+union split would recompute the block join once per branch)
-    if mode == "driver":
-        uniq = _driver_scored_pairs(spr.sparkSession, va, vb, "blend4")
-        scored = _attach_pair_scores(to_score, uniq)
-    elif mode == "spark":
-        uniq = _distinct_street_pairs(spr, cad).withColumn(
-            "scores", fuzzy_scores(F.col("__street_spr"), F.col("__street_cad"))
-        )
-        scored = _attach_pair_scores(to_score, uniq)
     else:
-        scored = to_score.withColumn(
-            "scores", fuzzy_scores(F.col("STREET_NORM_SPR"), F.col("STREET_NORM_CAD"))
+        # no kernel runs over the pairs, so no explicit exchange: a pure
+        # aggregate over the scores (the bench's throughput stage)
+        # shuffles no pairs at all
+        va, vb = vocab
+        table = spr.sparkSession.createDataFrame(
+            [(a, b, kernel(a, b)) for a in va for b in vb],
+            f"__street_spr string, __street_cad string, __raw {raw_type}",
         )
+        scored = _attach_pair_scores(_scoring_set(pairs), table)
 
-    best_score, best_strategy, strategy_rank = best_of_strategies("scores")
+    best_score, best_strategy, strategy_rank = finish("__raw")
     return (
         scored.withColumn("best_score", best_score)
         .withColumn("best_strategy", best_strategy)
         .withColumn("strategy_rank", strategy_rank)
+        .drop("__raw")
     )
 
 

@@ -279,8 +279,14 @@ def _ship_package(spark: SparkSession) -> None:
     the package once and ``addPyFile`` it — same mechanism, automatic.
     No-op when the package was itself imported from a ``--py-files`` zip:
     that zip is already on every executor's python path, and re-adding a
-    same-named file would collide with the submitted one.
+    same-named file would collide with the submitted one. The zip's
+    directory is removed at interpreter exit: executors fetch the file
+    from its path whenever they start, so it must outlive the session.
     """
+    import atexit
+    import shutil
+    import tempfile
+
     import registry_address_matcher_spark as pkg
 
     pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
@@ -290,5 +296,7 @@ def _ship_package(spark: SparkSession) -> None:
     jconf = spark.sparkContext.getConf()
     if jconf.get(marker, None):
         return
-    spark.sparkContext.addPyFile(build_pyfiles_zip())
+    zip_dir = tempfile.mkdtemp(prefix="ram_spark_")
+    atexit.register(shutil.rmtree, zip_dir, ignore_errors=True)
+    spark.sparkContext.addPyFile(build_pyfiles_zip(zip_dir))
     spark.sparkContext.getConf().set(marker, "1")

@@ -117,7 +117,7 @@ def test_adaptive_estimate_failure_is_recorded(spark, monkeypatch):
     monkeypatch.setattr(fz, "estimate_block_pairs", boom)
     spr = _reg(spark, [{"ADDRESS_ID": "S1", "STREET_NAME": "Ա", "HOUSE": "1", "BUILDING": ""}])
     cad = _reg(spark, [{"ADDRESS_ID": "C1", "STREET_NAME": "Ա", "HOUSE": "1", "BUILDING": ""}])
-    n = fz._scoring_partitions(spr, cad, None)
+    n = fz._scoring_partitions(spr, cad)
     assert n == max(spr.sparkSession.sparkContext.defaultParallelism * 4, 8)
     rows = drain_events_df(spark, "run-t").collect()
     assert len(rows) == 1
@@ -139,15 +139,9 @@ def test_candidate_pairs_custom_columns_without_id(spark):
     assert {"STREET_NORM_SPR", "STREET_NORM_CAD"} <= set(out.columns)
 
 
-def test_dedup_scoring_matches_direct_path(spark):
-    """Round-6 optimization: when the street vocabulary is small,
-    score_candidates scores each DISTINCT co-blocked street pair once and
-    broadcast-joins the scores back. The memoized path must be row-for-row
-    identical to the direct kernel path (same scores, same counts, same
-    top-1 choices) for both scorers."""
-    from registry_address_matcher_spark.config import ScaleConfig
-    from registry_address_matcher_spark.operators.fuzzy import fuzzy_matches, score_candidates
-
+def _tier_registries(spark):
+    """40 rows a side over a 4 x 4 street vocabulary: the driver tier by
+    default (product 16)."""
     rows_spr, rows_cad = [], []
     streets = ["ԱԲՈՎՅԱՆԻ", "ԲԱՂՐԱՄՅԱՆ ՊՈՂՈՏԱ", "ՄԱՇՏՈՑԻ ՊՈՂ", "ՏԵՐՅԱՆ Փ"]
     cstreets = ["ԱԲՈՎՅԱՆ", "ԲԱՂՐԱՄՅԱՆ ՊՈՂ", "ՄԱՇՏՈՑԻ ՊՈՂՈՏԱ", "ՏԵՐՅԱՆ ՓՈՂՈՑ"]
@@ -156,30 +150,57 @@ def test_dedup_scoring_matches_direct_path(spark):
                          "HOUSE": str(i % 3), "BUILDING": ""})
         rows_cad.append({"ADDRESS_ID": f"C{i}", "STREET_NAME": cstreets[i % 4],
                          "HOUSE": str(i % 3), "BUILDING": ""})
-    spr, cad = _reg(spark, rows_spr), _reg(spark, rows_cad)
-    on = ScaleConfig()  # dedup active (default bound) -> driver tier here
-    off = ScaleConfig(scoring_dedup_max_pairs=None)
-    import registry_address_matcher_spark.operators.fuzzy as fz
+    return _reg(spark, rows_spr), _reg(spark, rows_cad)
 
+
+def test_dedup_scoring_matches_direct_path(spark, monkeypatch):
+    """When the street vocabulary is small, score_candidates scores each
+    DISTINCT street pair once on the driver and broadcast-joins the
+    scores back. That driver tier must be row-for-row identical to the
+    direct Arrow-kernel tier (same scores, same counts, same top-1
+    choices) for both scorers."""
+    from registry_address_matcher_spark.operators import fuzzy as fz
+
+    spr, cad = _tier_registries(spark)
+    cols = ["ADDRESS_ID_SPR", "ADDRESS_ID_CAD", "STREET_NORM_SPR", "STREET_NORM_CAD",
+            "CANDIDATES_COUNT", "best_score", "best_strategy", "strategy_rank"]
+
+    def run():
+        return {
+            scorer: sorted(map(tuple, fz.score_candidates(spr, cad, scorer=scorer)
+                               .select(*cols).collect()))
+            for scorer in ("blend4", "jw")
+        }, sorted(map(tuple, fz.fuzzy_matches(spr, cad).drop("MATCH_TIMESTAMP").collect()))
+
+    driver, m_driver = run()
+    monkeypatch.setattr(fz, "_DRIVER_SCORE_MAX_PAIRS", 0)  # force the direct tier
+    direct, m_direct = run()
     for scorer in ("blend4", "jw"):
-        cols = ["ADDRESS_ID_SPR", "ADDRESS_ID_CAD", "best_score", "best_strategy",
-                "strategy_rank", "CANDIDATES_COUNT"]
-        want = sorted(map(tuple, score_candidates(spr, cad, off, scorer=scorer)
-                          .select(*cols).collect()))
-        got = sorted(map(tuple, score_candidates(spr, cad, on, scorer=scorer)
-                         .select(*cols).collect()))
-        assert got == want, f"scorer={scorer}: driver-tier dedup diverged"
-        # force the distributed tier (monkeypatch the driver ceiling to 0)
-        old = fz._DRIVER_SCORE_MAX_PAIRS
-        fz._DRIVER_SCORE_MAX_PAIRS = 0
-        try:
-            got_spark = sorted(map(tuple, score_candidates(spr, cad, on, scorer=scorer)
-                                   .select(*cols).collect()))
-        finally:
-            fz._DRIVER_SCORE_MAX_PAIRS = old
-        assert got_spark == want, f"scorer={scorer}: spark-tier dedup diverged"
-    m_on = sorted(map(tuple, fuzzy_matches(spr, cad, scale=on)
-                      .drop("MATCH_TIMESTAMP").collect()))
-    m_off = sorted(map(tuple, fuzzy_matches(spr, cad, scale=off)
-                       .drop("MATCH_TIMESTAMP").collect()))
-    assert m_on == m_off
+        # every co-blocked pair is scored: house blocks of 14, 13 and 13 rows
+        assert len(direct[scorer]) == 14 * 14 + 13 * 13 + 13 * 13
+        assert driver[scorer] == direct[scorer], f"scorer={scorer}: tiers diverged"
+    assert m_driver == m_direct
+
+
+def test_scoring_guard_actions_per_tier(spark, monkeypatch):
+    """Planning score_candidates launches exactly one guard action on the
+    driver tier (the vocabulary collect) and two on the direct tier (the
+    vocabulary collect plus the partition-count estimate)."""
+    from registry_address_matcher_spark.operators import fuzzy as fz
+
+    spr, cad = _tier_registries(spark)
+    frame_type = type(spr)
+    real_collect = frame_type.collect
+    calls = []
+
+    def counting_collect(self):
+        calls.append(1)
+        return real_collect(self)
+
+    monkeypatch.setattr(frame_type, "collect", counting_collect)
+    fz.score_candidates(spr, cad)
+    assert len(calls) == 1
+    calls.clear()
+    monkeypatch.setattr(fz, "_DRIVER_SCORE_MAX_PAIRS", 0)
+    fz.score_candidates(spr, cad)
+    assert len(calls) == 2

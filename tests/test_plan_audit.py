@@ -51,12 +51,10 @@ def test_fuzzy_plan_has_single_arrow_stage(spark):
     spr = preprocess_registry(E._spr(spark, SF))
     cad = preprocess_registry(E._cad(spark, SF))
     plan = _plan(fuzzy_matches(spr, cad))
-    # at most one Arrow python stage: the 4-scorer kernel. In the
-    # round-6 memoized tiers the pair set never enters Python at all —
-    # the spark tier keeps ONE ArrowEvalPython over the distinct
-    # vocabulary cross, the driver tier has ZERO (LocalTableScan score
-    # table); either way there is never a second Python stage and never
-    # a row-at-a-time BatchEvalPython.
+    # at most one Arrow python stage: the 4-scorer kernel of the direct
+    # tier. The driver tier has ZERO (LocalTableScan score table); either
+    # way there is never a second Python stage and never a row-at-a-time
+    # BatchEvalPython.
     assert plan.count("ArrowEvalPython") <= 1
     assert "BatchEvalPython" not in plan
     # blocking is an equi-join, not a cartesian product

@@ -57,6 +57,19 @@ def test_build_pyfiles_zip_layout(tmp_path):
     assert not any(n.endswith(".pyc") for n in names)
 
 
+def test_get_spark_leaves_no_package_zip_dir(tmp_path):
+    """The zip get_spark ships to executors lives in a temp directory that
+    must be gone once the process exits — one leaked directory per
+    session otherwise piles up in TMPDIR."""
+    script = (
+        "from registry_address_matcher_spark.session import get_spark\n"
+        "get_spark('zip-leak', master='local[1]').stop()\n"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path), "PYTHONPATH": REPO}
+    subprocess.run([sys.executable, "-c", script], env=env, check=True, timeout=300)
+    assert not list(tmp_path.glob("ram_spark_*"))
+
+
 @pytest.mark.skipif(_spark_submit() is None, reason="spark-submit not on PATH")
 def test_spark_submit_pyfiles_end_to_end(tmp_path):
     """Full repos job via spark-submit from OUTSIDE the repo, package

@@ -75,24 +75,53 @@ def test_v3_multiblock_declared_query_is_uncapped(spark, hot_block_sf_dir):
     assert n_capped < n_declared
 
 
-def test_v3_match_declared_query_source_uses_uncapped_scale():
+class _Captured(Exception):
+    """Stops a declared query once its capped stage has been called."""
+
+
+def _capture_scale(monkeypatch, module, name):
+    """Replace ``module.name`` with a fake that records the ScaleConfig it
+    is given and stops the query there; returns the record list."""
+    seen = []
+
+    def fake(*args, scale=None, **kwargs):
+        seen.append(scale)
+        raise _Captured
+
+    monkeypatch.setattr(module, name, fake)
+    return seen
+
+
+def test_v3_match_declared_query_passes_uncapped_scale(spark, hot_block_sf_dir, monkeypatch):
     """match_v3's cand set must follow the same uncapped oracle contract;
-    running the full N x N scored flow is too heavy for CI, so pin the
-    construction instead: the entry query must pass a cap-off
-    ScaleConfig through to match_v3."""
-    import inspect
+    running the full N x N scored flow is too heavy for CI, so a fake
+    match_v3 captures the ScaleConfig the declared query passes."""
+    from registry_address_matcher_spark.operators import engine_v3
 
-    src = inspect.getsource(entry_mod.q_v3_match)
-    assert "max_pairs_per_block=None" in src
+    seen = _capture_scale(monkeypatch, engine_v3, "match_v3")
+    with pytest.raises(_Captured):
+        entry_mod.queries()["v3_match"](spark, hot_block_sf_dir)
+    assert len(seen) == 1
+    assert isinstance(seen[0], ScaleConfig)
+    assert seen[0].max_pairs_per_block is None
 
 
-def test_repos_match_declared_query_source_uses_uncapped_scale():
+def test_repos_match_declared_query_passes_uncapped_scale(spark, tmp_path, monkeypatch):
     """Same latent class as v3: _repos_match_oracle's band_pairs CTE is
     the uncapped band-bucket join (its only encoded truncation is the
     phonetic_block_cap), so the declared query must disable the
     band-block pair cap; a >1M-pair band bucket (~1.4k identical docs)
-    is too heavy to build in CI, so pin the construction."""
-    import inspect
+    is too heavy to build in CI, so a fake candidate_block_pairs
+    captures the ScaleConfig instead."""
+    from registry_address_matcher_spark import repos_pipeline
 
-    src = inspect.getsource(entry_mod.q_repos_match)
-    assert "max_pairs_per_block=None" in src
+    pd.DataFrame(
+        {"doc_id": [1, 2], "source": ["a", "b"], "lang": ["en", "en"],
+         "text": ["same text", "same text"]}
+    ).to_parquet(tmp_path / "documents.parquet", index=False)
+    seen = _capture_scale(monkeypatch, repos_pipeline, "candidate_block_pairs")
+    with pytest.raises(_Captured):
+        entry_mod.queries()["repos_match"](spark, str(tmp_path))
+    assert len(seen) == 1
+    assert isinstance(seen[0], ScaleConfig)
+    assert seen[0].max_pairs_per_block is None
