@@ -330,39 +330,15 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN baseline — brute-force cosine top-10 per probe vector
-    (F.aggregate/zip_with dot products, JVM-side).
+    (``ann.topk_bruteforce``). The corpus is spread to cluster width
+    (one parquet row group is one task otherwise) and the probes, every
+    200th vector, are filtered from that same spread corpus."""
+    from registry_address_matcher_spark.operators.ann import topk_bruteforce
 
-    Plan shape (optimization guide §2.4/§3.1): the PROBE side (|corpus|/200
-    rows) is broadcast and the corpus streams — at scale the corpus can
-    never be the broadcast side. The corpus arrives as ONE parquet
-    row-group (unsplittable single task), so it is round-robin
-    repartitioned to the cluster's defaultParallelism before the
-    per-pair work; per-row norms are projected BEFORE the join so each
-    ||v|| fold runs once per row, not once per pair (the per-pair values
-    are the identical doubles — same fold expression, same input)."""
-    emb = _load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    norm = lambda c: F.sqrt(F.aggregate(F.zip_with(c, c, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x))  # noqa: E731
-    corpus = emb.repartition(spark.sparkContext.defaultParallelism).withColumn(
-        "nv", norm("v")
-    )
-    probes = corpus.filter(F.col("vec_id") % 200 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nv").alias("nq")
-    )
-    pairs = corpus.crossJoin(F.broadcast(probes)).filter(
-        F.col("vec_id") != F.col("q_id")
-    )
-    dot = F.aggregate(
-        F.zip_with("qv", "v", lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-    )
-    pairs = pairs.withColumn("cos", F.round(dot / (F.col("nq") * F.col("nv")), 6))
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("q_id", "vec_id", "cos", F.col("rn").alias("rank"))
-    )
+    corpus = _spread(spark, _load(spark, sf_dir, "embeddings"))
+    probes = corpus.filter(F.col("vec_id") % 200 == 0)
+    top = topk_bruteforce(corpus, probes, "vec_id", "embedding", k=10)
+    return top.withColumnRenamed("id", "vec_id")
 
 
 def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1256,6 +1232,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "exact_dedup": q_exact_dedup,
         "token_count": q_token_count,
         "embedding_topk": q_embedding_topk,
+        "embedding_neardup": q_embedding_neardup,
+        "ann_topk_lsh": q_ann_topk_lsh,
+        "ann_topk_ivf": q_ann_topk_ivf,
         "connected_components": q_connected_components,
         "registry_quality": q_registry_quality,
         "house_decode": q_house_decode,
@@ -1287,7 +1266,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "asof_join": q_asof_join,
         "session_errors": q_session_errors,
         "rollup_daily": q_rollup_daily,
-        "embedding_neardup": q_embedding_neardup,
         "substr_filter": q_substr_filter,
         "pagination": q_pagination,
         "fuzzy_top1": q_fuzzy_top1,
@@ -1299,8 +1277,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "v3_match": q_v3_match,
         "minhash_dedup": q_minhash_dedup,
         "simhash_neardup": q_simhash_neardup,
-        "ann_topk_lsh": q_ann_topk_lsh,
-        "ann_topk_ivf": q_ann_topk_ivf,
         "media_stats": q_media_stats,
         "repos_match": q_repos_match,
     }

@@ -1,17 +1,18 @@
 """Approximate nearest neighbors over an embedding column.
 
-* :func:`topk_bruteforce` — exact baseline: broadcast the (small) probe
-  set against the corpus, native dot products, windowed top-k. One scan
-  of the corpus, no shuffle of the corpus itself.
-* :func:`topk_lsh` — the scale path: ``n_tables`` independent random-
-  hyperplane tables. ALL table keys are computed in ONE native projection
-  (array of per-table buckets + posexplode), so the corpus is scanned
-  exactly once and nothing crosses into Python — the round-1 version
-  scanned/unioned the corpus once per table through a pandas UDF. The
-  probe side is broadcast, so the corpus never shuffles either: the join
-  is a broadcast equi-join on (table, bucket). Recall < 1 by
-  construction; accuracy is measured against the brute-force baseline in
-  tests.
+Every method returns ``DataFrame[q_id, id, cos, rank]``. Vectors and
+their norms come from :func:`~.dedup.double_vecs` (one norm per row,
+projected before any join); the pairs are scored by
+:func:`~.dedup.cosine_over` and ranked in one shared top-k window. The
+probe side is always broadcast, so the join never shuffles the corpus.
+
+* :func:`topk_bruteforce` — exact baseline: every probe against every
+  corpus row.
+* :func:`topk_lsh` — ``n_tables`` random-hyperplane tables, all keys
+  computed in ONE native projection (array of per-table buckets +
+  posexplode), joined on (table, bucket). Recall < 1 by construction;
+  measured against brute force in tests.
+* :func:`topk_ivf` — coarse quantizer lists, ``nprobe`` lists per probe.
 """
 
 from __future__ import annotations
@@ -21,18 +22,28 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import (
-    cosine_col,
+    cosine_over,
     dot_fold,
+    double_vecs,
     hyperplane_bucket_over,
     hyperplane_planes,
     hyperplane_tables_df,
 )
 
 
-def _as_double_vec(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
+def _probe_side(vecs: DataFrame) -> DataFrame:
+    return vecs.select(F.col("id").alias("q_id"), F.col("v").alias("qv"), F.col("nv").alias("nq"))
+
+
+def _topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Cosine + ``row_number`` top-k over ``(q_id, id, qv, v, nq, nv)``
+    pairs; ties break on ``id``."""
+    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("id").asc())
+    return (
+        pairs.withColumn("cos", cosine_over(F.col("qv"), F.col("v"), F.col("nq"), F.col("nv")))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "id", "cos", "rank")
     )
 
 
@@ -40,22 +51,15 @@ def topk_bruteforce(
     corpus: DataFrame, probes: DataFrame, id_col: str, vec_col: str, k: int = 10
 ) -> DataFrame:
     """Exact top-k: DataFrame[q_id, id, cos, rank]."""
-    c = _as_double_vec(corpus, id_col, vec_col)
-    p = _as_double_vec(probes, id_col, vec_col).select(
-        F.col("id").alias("q_id"), F.col("v").alias("qv")
+    p = _probe_side(double_vecs(probes, id_col, vec_col))
+    pairs = double_vecs(corpus, id_col, vec_col).join(
+        F.broadcast(p), F.col("id") != F.col("q_id")
     )
-    pairs = c.join(F.broadcast(p), F.col("id") != F.col("q_id"))
-    pairs = pairs.withColumn("cos", F.round(cosine_col(F.col("qv"), F.col("v")), 6))
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "id", "cos", "rank")
-    )
+    return _topk(pairs, k)
 
 
-def _multi_table_keyed(vecs: DataFrame, planes_per_table: list, id_alias: str, v_alias: str) -> DataFrame:
-    """One projection computing every table's bucket, exploded to
+def _multi_table_keyed(vecs: DataFrame, planes_per_table: list, v_col: str) -> DataFrame:
+    """``vecs`` plus every table's bucket of ``v_col``, exploded to
     (table, bucket) rows — a single pass over the input. The plane
     matrices ride as broadcast DATA (one-row cross join +
     higher-order-function folds): zero large literals in the plan, so
@@ -67,12 +71,9 @@ def _multi_table_keyed(vecs: DataFrame, planes_per_table: list, id_alias: str, v
     # an alias target and inside the generator in one select trips
     # Spark's lateral-column-alias resolution (INTERNAL_ERROR)
     withb = vecs.crossJoin(F.broadcast(tables)).withColumn(
-        "__bk", F.transform(F.col("__ts"), lambda tbl: hyperplane_bucket_over(F.col("v"), tbl))
+        "__bk", F.transform(F.col("__ts"), lambda tbl: hyperplane_bucket_over(F.col(v_col), tbl))
     )
-    return withb.select(
-        F.col("id").alias(id_alias), F.col("v").alias(v_alias),
-        F.posexplode("__bk").alias("table", "bucket"),
-    )
+    return withb.select(*vecs.columns, F.posexplode("__bk").alias("table", "bucket"))
 
 
 def topk_lsh(
@@ -102,22 +103,12 @@ def topk_lsh(
     if dim is None:
         raise ValueError("dim is required (no plan-build-time actions)")
     planes = [hyperplane_planes(dim, n_bits, seed + t) for t in range(n_tables)]
-    c = _as_double_vec(corpus, id_col, vec_col)
-    p = _as_double_vec(probes, id_col, vec_col)
-    c_keyed = _multi_table_keyed(c, planes, "id", "v")
-    p_keyed = _multi_table_keyed(p, planes, "q_id", "qv")
+    c_keyed = _multi_table_keyed(double_vecs(corpus, id_col, vec_col), planes, "v")
+    p_keyed = _multi_table_keyed(_probe_side(double_vecs(probes, id_col, vec_col)), planes, "qv")
     pairs = c_keyed.join(F.broadcast(p_keyed), ["table", "bucket"]).filter(
         F.col("id") != F.col("q_id")
     )
-    pairs = pairs.dropDuplicates(["q_id", "id"]).withColumn(
-        "cos", F.round(cosine_col(F.col("qv"), F.col("v")), 6)
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "id", "cos", "rank")
-    )
+    return _topk(pairs.dropDuplicates(["q_id", "id"]), k)
 
 
 # ---------------------------------------------------------------------------
@@ -189,32 +180,22 @@ def topk_ivf(
     """
     cdf = centroids_df(corpus.sparkSession, centroids)
     c = (
-        _as_double_vec(corpus, id_col, vec_col)
+        double_vecs(corpus, id_col, vec_col)
         .crossJoin(F.broadcast(cdf))
         .withColumn("cid", ivf_assign_col(centroid_dists_col(F.col("v"))))
         .drop("__cs")
     )
-    p = _as_double_vec(probes, id_col, vec_col).select(
-        F.col("id").alias("q_id"), F.col("v").alias("qv")
-    )
+    p = _probe_side(double_vecs(probes, id_col, vec_col))
     # probe-side nprobe lists: explode all centroid distances, rank
     pk = p.crossJoin(F.broadcast(cdf)).select(
-        "q_id", F.col("qv"),
+        "q_id", "qv", "nq",
         F.posexplode(centroid_dists_col(F.col("qv"))).alias("cidx", "dist"),
     )
     w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("cidx").asc())
     pk = (
         pk.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= nprobe)
-        .select("q_id", "qv", (F.col("cidx") + 1).alias("cid"))  # 1-based like assign
+        .select("q_id", "qv", "nq", (F.col("cidx") + 1).alias("cid"))  # 1-based like assign
     )
     pairs = c.join(F.broadcast(pk), "cid").filter(F.col("id") != F.col("q_id"))
-    pairs = pairs.dropDuplicates(["q_id", "id"]).withColumn(
-        "cos", F.round(cosine_col(F.col("qv"), F.col("v")), 6)
-    )
-    wk = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "id", "cos", "rank")
-    )
+    return _topk(pairs.dropDuplicates(["q_id", "id"]), k)

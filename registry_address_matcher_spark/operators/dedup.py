@@ -520,21 +520,6 @@ def simhash_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
 # embedding cosine near-dup
 # ---------------------------------------------------------------------------
 
-def cosine_col(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array<double> columns; NULL when either
-    vector has zero norm (cosine is undefined there). ``try_divide``,
-    not ``/``: Spark 4 runs ANSI mode by default, where a plain division
-    THROWS DIVIDE_BY_ZERO — one all-zero embedding (a padding row, a
-    failed encoder) would crash every ANN/near-dup job that scans it.
-    NULL is the right value downstream: it ranks below every real
-    similarity in the top-k windows (descending sort puts NULLs last)
-    and fails every ``cos >= threshold`` near-dup filter."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-    na = F.sqrt(F.aggregate(F.zip_with(a, a, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x))
-    nb = F.sqrt(F.aggregate(F.zip_with(b, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x))
-    return F.try_divide(dot, na * nb)
-
-
 def hyperplane_planes(dim: int, n_bits: int, seed: int) -> np.ndarray:
     """Gaussian hyperplane matrix (n_bits x dim), seed-deterministic.
     Plan-build-time values — embeddable as literals in oracle SQL."""
@@ -548,6 +533,28 @@ def dot_fold(vec: Column, other: Column) -> Column:
     return F.aggregate(
         F.zip_with(vec, other, lambda x, p: x * p), F.lit(0.0), lambda a, x: a + x
     )
+
+
+def double_vecs(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """``(id, v, nv)``: the vector cast to ``array<double>`` and its L2
+    norm, projected once per row — before any pair formation, so no
+    norm fold ever runs per pair."""
+    v = F.transform(vec_col, lambda x: x.cast("double"))
+    return df.select(F.col(id_col).alias("id"), v.alias("v")).withColumn(
+        "nv", F.sqrt(dot_fold(F.col("v"), F.col("v")))
+    )
+
+
+def cosine_over(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine of two ``array<double>`` columns given their norms, rounded
+    to 6 places; NULL when either norm is zero (cosine is undefined
+    there). ``try_divide``, not ``/``: Spark 4 runs ANSI mode by default,
+    where a plain division THROWS DIVIDE_BY_ZERO — one all-zero embedding
+    (a padding row, a failed encoder) would crash every job that scans
+    it. NULL is the right value downstream: it ranks below every real
+    similarity in the top-k windows (descending sort puts NULLs last) and
+    fails every ``cos >= threshold`` near-dup filter."""
+    return F.round(F.try_divide(dot_fold(a, b), na * nb), 6)
 
 
 def hyperplane_tables_df(spark, planes_per_table: list) -> DataFrame:
@@ -601,29 +608,17 @@ def embedding_neardup_pairs(
     all sign bits with high probability). ``dim`` is required on the LSH
     path — inferring it would cost a driver-side action at plan-build
     time."""
-    # per-row norm projected BEFORE pair formation: each ||v|| fold runs
-    # once per row instead of once per pair, and try_divide(dot, nl*nr)
-    # evaluates to the identical doubles (same fold, same inputs) as the
-    # inline cosine_col form it replaces (guide §2.3: move work off the
-    # quadratic path)
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.zip_with(c, c, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-    )
-    vecs = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
-    ).withColumn("nv", norm(F.col("v")))
+    vecs = double_vecs(df, id_col, vec_col)
+
+    def side(d: DataFrame, suffix: str, *keys: str) -> DataFrame:
+        return d.select(*keys, *(F.col(c).alias(f"{c}_{suffix}") for c in ("id", "v", "nv")))
+
     if exact:
         # the streamed side is spread to cluster width first — a
         # single-row-group parquet scan otherwise runs the whole
         # quadratic pair loop in one task (the embedding_topk disease)
-        left = vecs.repartition(df.sparkSession.sparkContext.defaultParallelism).select(
-            F.col("id").alias("id_l"), F.col("v").alias("v_l"), F.col("nv").alias("n_l")
-        )
-        right = vecs.select(
-            F.col("id").alias("id_r"), F.col("v").alias("v_r"), F.col("nv").alias("n_r")
-        )
-        pairs = left.crossJoin(right).filter(F.col("id_l") < F.col("id_r"))
+        spread = vecs.repartition(df.sparkSession.sparkContext.defaultParallelism)
+        pairs = side(spread, "l").crossJoin(side(vecs, "r"))
     else:
         if dim is None:
             raise ValueError("dim is required for the LSH path (no plan-build actions)")
@@ -633,20 +628,12 @@ def embedding_neardup_pairs(
         tables = hyperplane_tables_df(df.sparkSession, [planes])
         keyed = vecs.crossJoin(F.broadcast(tables)).withColumn(
             "k", hyperplane_bucket_over(F.col("v"), F.col("__ts")[0])
-        ).drop("__ts")
-        left = keyed.select(
-            "k", F.col("id").alias("id_l"), F.col("v").alias("v_l"), F.col("nv").alias("n_l")
         )
-        right = keyed.select(
-            "k", F.col("id").alias("id_r"), F.col("v").alias("v_r"), F.col("nv").alias("n_r")
-        )
-        pairs = left.join(right, "k").filter(F.col("id_l") < F.col("id_r"))
-    dot = F.aggregate(
-        F.zip_with(F.col("v_l"), F.col("v_r"), lambda x, y: x * y),
-        F.lit(0.0), lambda s, x: s + x,
-    )
+        pairs = side(keyed, "l", "k").join(side(keyed, "r", "k"), "k")
+    cos = cosine_over(F.col("v_l"), F.col("v_r"), F.col("nv_l"), F.col("nv_r"))
     return (
-        pairs.withColumn("cos", F.round(F.try_divide(dot, F.col("n_l") * F.col("n_r")), 6))
+        pairs.filter(F.col("id_l") < F.col("id_r"))
+        .withColumn("cos", cos)
         .filter(F.col("cos") >= threshold)
         .select("id_l", "id_r", "cos")
     )

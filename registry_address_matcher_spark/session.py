@@ -292,11 +292,13 @@ def _ship_package(spark: SparkSession) -> None:
     pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
     if not os.path.isdir(pkg_dir):
         return
-    marker = "__ram_spark_pkg_shipped"
-    jconf = spark.sparkContext.getConf()
-    if jconf.get(marker, None):
+    # the mark lives on the live SparkContext object: getOrCreate hands
+    # back the same context, a stopped-then-rebuilt session a new one
+    # (a conf entry would not do — getConf() returns a copy)
+    sc = spark.sparkContext
+    if getattr(sc, "_ram_spark_pkg_shipped", False):
         return
     zip_dir = tempfile.mkdtemp(prefix="ram_spark_")
     atexit.register(shutil.rmtree, zip_dir, ignore_errors=True)
-    spark.sparkContext.addPyFile(build_pyfiles_zip(zip_dir))
-    spark.sparkContext.getConf().set(marker, "1")
+    sc.addPyFile(build_pyfiles_zip(zip_dir))
+    sc._ram_spark_pkg_shipped = True

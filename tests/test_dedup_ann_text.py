@@ -418,15 +418,24 @@ def test_minhash_fused_text_kernel_contract(spark):
     assert sorted(md5_out.loc[0, "sh"]) == sorted(oracle_sh.loc[0, "sh"])
 
 
-def test_zero_norm_embeddings_never_crash_or_rank(spark):
+def test_zero_norm_embeddings_never_crash_or_rank(spark, tmp_path):
     """Spark 4 defaults to ANSI mode, where a plain division throws
     DIVIDE_BY_ZERO — so one all-zero embedding (padding row, failed
-    encoder) used to crash every cosine consumer. cosine_col now uses
-    try_divide: zero-norm rows score NULL, which sorts below every real
-    similarity in the top-k window and fails every >= threshold
+    encoder) would crash a cosine that divides with ``/``. Every cosine
+    consumer (brute-force, LSH and IVF top-k, near-dup pairs and the
+    ``embedding_topk`` query) goes through ``dedup.cosine_over``, which
+    uses try_divide: zero-norm rows score NULL, which sorts below every
+    real similarity in the top-k window and fails every >= threshold
     near-dup filter — they can appear in results only when real
     candidates run out, never above them, and never as near-dups."""
-    from registry_address_matcher_spark.operators.ann import topk_bruteforce
+    import numpy as np
+
+    import __spark_entry__ as E
+    from registry_address_matcher_spark.operators.ann import (
+        topk_bruteforce,
+        topk_ivf,
+        topk_lsh,
+    )
     from registry_address_matcher_spark.operators.dedup import (
         embedding_neardup_pairs,
     )
@@ -438,15 +447,31 @@ def test_zero_norm_embeddings_never_crash_or_rank(spark):
         ("z2", [0.0, 0.0, 0.0, 0.0]),  # zero norm
     ]
     emb = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
+    zeros = {"z1", "z2"}
 
-    # brute-force top-k over the whole table: must not raise; the zero
-    # rows' cos is NULL and ranks after the real match
-    bf = topk_bruteforce(emb, emb.filter(F.col("vec_id") == "a"),
-                         "vec_id", "embedding", k=3).toPandas()
-    assert list(bf.sort_values("rank")["id"])[0] == "b"
-    null_cos = bf[bf["id"].isin(["z1", "z2"])]["cos"]
-    assert null_cos.isna().all()
-    assert (bf[bf["id"] == "b"]["rank"] < bf[bf["id"].isin(["z1", "z2"])]["rank"].min()).all()
+    def check_topk(out):
+        # zero rows on either side score NULL, and within each probe every
+        # real similarity ranks above every NULL
+        zero_pair = out["id"].isin(zeros) | out["q_id"].isin(zeros)
+        assert out[zero_pair]["cos"].isna().all()
+        assert out[~zero_pair]["cos"].notna().all()
+        for _, g in out.groupby("q_id"):
+            real, null = g[g["cos"].notna()], g[g["cos"].isna()]
+            if len(real) and len(null):
+                assert real["rank"].max() < null["rank"].min()
+
+    # top-k over the whole table, zero vectors among probes AND corpus:
+    # must not raise; "a" still finds "b" first
+    for topk in (
+        lambda: topk_bruteforce(emb, emb, "vec_id", "embedding", k=3),
+        lambda: topk_lsh(emb, emb, "vec_id", "embedding", k=3, n_bits=2, n_tables=4, dim=4),
+        lambda: topk_ivf(emb, emb, "vec_id", "embedding",
+                         np.random.RandomState(0).randn(2, 4), k=3, nprobe=2),
+    ):
+        out = topk().toPandas()
+        check_topk(out)
+        a = out[out["q_id"] == "a"].sort_values("rank")
+        assert list(a["id"])[0] == "b"
 
     # near-dup: zero-norm rows never pass the threshold filter — not
     # even against each other (cosine of two zero vectors is undefined,
@@ -454,8 +479,23 @@ def test_zero_norm_embeddings_never_crash_or_rank(spark):
     nd = embedding_neardup_pairs(emb, "vec_id", "embedding",
                                  threshold=0.5, exact=True).toPandas()
     ids = set(nd.id_l) | set(nd.id_r)
-    assert "z1" not in ids and "z2" not in ids
+    assert not ids & zeros
     assert {"a", "b"} <= ids
+
+    # the declared embedding_topk query over a table with one zero
+    # vector, which is also a probe (vec_id % 200 == 0)
+    vecs = np.random.RandomState(3).rand(401, 8)
+    vecs[200] = 0.0
+    spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id bigint, embedding array<float>",
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+    top = E.q_embedding_topk(spark, str(tmp_path)).toPandas()
+    assert sorted(top["q_id"].unique()) == [0, 200, 400]
+    assert len(top) == 30
+    assert 200 not in set(top[top["q_id"] != 200]["vec_id"])
+    assert top[top["q_id"] == 200]["cos"].isna().all()
+    assert top[top["q_id"] != 200]["cos"].notna().all()
 
 
 def test_stratified_sample_deterministic_and_null_safe(spark):

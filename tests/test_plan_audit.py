@@ -95,6 +95,30 @@ def test_ann_lsh_plan_native_single_scan(spark):
     assert "CartesianProduct" not in plan
 
 
+@pytest.mark.parametrize("method", ["bruteforce", "lsh", "ivf"])
+def test_ann_norms_projected_per_row_below_the_join(spark, method):
+    """Vector norms are folded once per ROW, below the pair-forming join:
+    no sqrt may appear on the join line or anywhere above it, where it
+    would run once per candidate PAIR."""
+    import numpy as np
+
+    from registry_address_matcher_spark.operators import ann
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    probes = emb.filter(F.col("vec_id") % 200 == 0)
+    df = {
+        "bruteforce": lambda: ann.topk_bruteforce(emb, probes, "vec_id", "embedding"),
+        "lsh": lambda: ann.topk_lsh(emb, probes, "vec_id", "embedding", dim=64),
+        "ivf": lambda: ann.topk_ivf(
+            emb, probes, "vec_id", "embedding", np.random.RandomState(7).randn(16, 64)
+        ),
+    }[method]()
+    lines = _plan(df).splitlines()
+    first_join = next(i for i, ln in enumerate(lines) if "Join" in ln)
+    above = "\n".join(lines[: first_join + 1])
+    assert "sqrt(" not in above.lower(), above
+
+
 def test_embedding_neardup_lsh_plan_native(spark):
     from registry_address_matcher_spark.operators.dedup import embedding_neardup_pairs
 

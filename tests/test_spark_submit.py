@@ -58,15 +58,30 @@ def test_build_pyfiles_zip_layout(tmp_path):
 
 
 def test_get_spark_leaves_no_package_zip_dir(tmp_path):
-    """The zip get_spark ships to executors lives in a temp directory that
-    must be gone once the process exits — one leaked directory per
+    """get_spark zips the package for executors once per live context: a
+    second call on the same context ships nothing, a stopped-then-rebuilt
+    session (new context) ships again. Each zip lives in a temp directory
+    that must be gone once the process exits — one leaked directory per
     session otherwise piles up in TMPDIR."""
     script = (
+        "import glob, os, tempfile\n"
         "from registry_address_matcher_spark.session import get_spark\n"
-        "get_spark('zip-leak', master='local[1]').stop()\n"
+        "def n(): return len(glob.glob(os.path.join(tempfile.gettempdir(), 'ram_spark_*')))\n"
+        "s = get_spark('zip-leak', master='local[1]')\n"
+        "assert get_spark('zip-leak', master='local[1]') is s\n"
+        "print('same', n())\n"
+        "s.stop()\n"
+        "s = get_spark('zip-leak', master='local[1]')\n"
+        "print('rebuilt', n())\n"
+        "s.stop()\n"
     )
     env = {**os.environ, "TMPDIR": str(tmp_path), "PYTHONPATH": REPO}
-    subprocess.run([sys.executable, "-c", script], env=env, check=True, timeout=300)
+    proc = subprocess.run(
+        [sys.executable, "-c", script], env=env, check=True, timeout=300,
+        capture_output=True, text=True,
+    )
+    counts = [ln for ln in proc.stdout.splitlines() if ln.startswith(("same", "rebuilt"))]
+    assert counts == ["same 1", "rebuilt 2"], proc.stdout
     assert not list(tmp_path.glob("ram_spark_*"))
 
 
